@@ -82,9 +82,7 @@ end-to-end for one actual format — each with a
 DuckDB oracle twin (COVERAGE.md is the full map; non-query machinery
 — continuous aggregates, Z-order layout, streaming
 sinks/packing/dedup/fuzzy-admission, BPE tokenizer train/apply — is
-pytest-covered there too). tests/plan_ledger.json machine-checks
-that out-of-verify-window queries' plans are unchanged since their
-last external certification.
+pytest-covered there too).
 """
 
 from __future__ import annotations

@@ -1619,10 +1619,11 @@ def exact_pairs_plan_for(
     ``prefix_jaccard_pairs`` is LOSSLESS but its output (and verify
     stage) is inherently super-linear in dense near-dup clusters:
     measured 2.8 s at 5k docs → 95.5 s at 50k (≈34× for 10×,
-    exponent ≈1.5 — BENCH_DETAIL rehearsal_10x). Extrapolating that
-    curve, a 60 s single-stage budget is exhausted near ~37k docs, so
-    the default crossover is 30k: below it pipelines get the exact
-    join; above it they MUST take ``lsh_candidate_pairs`` (linear in
+    exponent ≈1.5: the sf0.1 documents and a 10× id-remapped copy).
+    Extrapolating that curve, a 60 s single-stage budget is exhausted
+    near ~37k docs, so the default crossover is 30k: below it
+    pipelines get the exact join; above it they MUST take
+    ``lsh_candidate_pairs`` (linear in
     banded candidates) and meter the loss with ``lsh_recall_report``
     (both externally certified). The loss is explicit, never silent:
     the planner's answer carries the meter's name.

@@ -17,7 +17,11 @@ These are the knobs a 100 TB deployment turns when the defaults
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.portable import micro
@@ -127,6 +131,30 @@ def ensure_parallelism_for_heavy_scan(
     return df.repartition(target)
 
 
+_AQE = "spark.sql.adaptive.enabled"
+_AQE_LOCK = threading.Lock()
+
+
+@contextmanager
+def _aqe_disabled(spark: SparkSession) -> Iterator[None]:
+    """Turn AQE off for the body, then put the key back exactly as it
+    was found: the previous value when it was set, ``unset`` when it
+    was not (so the session default still applies afterwards). The
+    lock serializes the checkpoint helpers below; the flag is still
+    session-global, so other threads planning on the same session
+    while the body runs see AQE off."""
+    with _AQE_LOCK:
+        prev = spark.conf.getAll.get(_AQE)
+        spark.conf.set(_AQE, "false")
+        try:
+            yield
+        finally:
+            if prev is None:
+                spark.conf.unset(_AQE)
+            else:
+                spark.conf.set(_AQE, prev)
+
+
 def checkpoint_partitioned(
     df: DataFrame, *cols: str, eager: bool = True
 ) -> DataFrame:
@@ -141,9 +169,9 @@ def checkpoint_partitioned(
     (connected_components, pagerank) pre-partition their EDGE table on
     the per-round join key precisely so the big side never reshuffles
     across rounds; with AQE on, that repartition silently bought
-    nothing (observed: every checkpoint scan in
-    plans/r10/supplier_pagerank_before.txt reads
-    ``UnknownPartitioning(0)`` and the per-round plans re-exchange
+    nothing (observed: every checkpoint scan in the
+    ``supplier_pagerank`` physical plan read
+    ``UnknownPartitioning(0)`` and the per-round plans re-exchanged
     both sides). Flipping AQE off for this one materialization makes
     the checkpoint record ``hashpartitioning(cols, N)``; per-round
     joins then exchange only the small (ranks/labels) side —
@@ -156,13 +184,8 @@ def checkpoint_partitioned(
     correct whenever the first consumer is a single sequential job —
     a frame feeding two PARALLEL stages of one job should stay eager
     or both stages race to compute it."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with _aqe_disabled(df.sparkSession):
         return df.repartition(*cols).localCheckpoint(eager=eager)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def checkpoint_keep_partitioning(
@@ -180,13 +203,8 @@ def checkpoint_keep_partitioning(
     enough. The loop-state frames are the SMALL side (edge-touched
     vertices / node ranks), so losing AQE for their per-round jobs
     costs nothing; the win is the removed per-round exchange."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with _aqe_disabled(df.sparkSession):
         return df.localCheckpoint(eager=eager)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def repartition_for_join(df: DataFrame, key: str, n: int | None = None) -> DataFrame:

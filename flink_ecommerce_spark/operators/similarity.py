@@ -92,7 +92,7 @@ def lsh_plan_for(
     max(1, ceil(log2(n / target))) keeps the expected bucket at
     ~target rows whether the corpus is 2k or 20B vectors. A small
     corpus gets FEW planes — at 2k vectors 8 planes means 8-row
-    buckets and near-zero recall (measured in bench.py's ANN grid),
+    buckets and near-zero recall (measured on the sf0.1 embeddings),
     while 1 plane scans ~half the corpus per query, which at that
     size is the right price for real recall. Past N_PLANES planes
     (corpus > target·2^N_PLANES) the buckets are narrow enough that
@@ -120,12 +120,13 @@ def ann_plan_for(
       Exact beats approximate whenever it's affordable — a 2k-vector
       fixture or a 10-query probe of a 10M corpus are both GEMM
       territory; every indexed method only subtracts recall there
-      (bench ann_grid: 8-plane LSH recalls 0.04 at 2k vectors).
+      (8-plane LSH recalls 0.04 at 2k vectors).
     - above it: two-stage PQ re-rank (``pq_ann_rerank``) — ADC over
       8-byte codes shortlists, full-precision re-rank touches only
       shortlist×queries rows. The advertised scale default: at any
       corpus size its recall/cost frontier dominates single-probe LSH
-      (BENCH_DETAIL ann_grid), and its memory moves are codes-sized.
+      (measured on the sf0.1 embeddings), and its memory moves are
+      codes-sized.
     - ``ann_lsh_multiprobe``/``ann_lsh_topk`` remain the bucketed
       alternative when an UNINDEXED one-shot pass must avoid even the
       codebook build: planes from ``lsh_plan_for``.
@@ -1464,12 +1465,13 @@ def pq_ann_topk(
 PQ_RERANK = 50  # ADC shortlist size for the re-rank stage (IVF-PQ)
 # pq_ann_rerank's shortlist: sized so the MEASURED recall@5 of the
 # above-crossover recommendation clears the BASELINE.md 0.9 bar with
-# margin (bench ann_grid r06: 50→0.64, 200→0.86, 400→0.98 on the
-# sf0.1 fixture — the sampled 32-codeword ADC is the weak stage, so
-# the shortlist carries the recall). The cost stays absolute, not
+# margin (measured: 50→0.64, 200→0.86, 400→0.98 on the sf0.1
+# fixture — the sampled 32-codeword ADC is the weak stage, so the
+# shortlist carries the recall). The cost stays absolute, not
 # corpus-relative: re-rank touches shortlist×queries full-precision
-# rows at ANY corpus size, and bench.py gates the recommended row at
-# recall ≥ 0.9 so a regression fails the bench, not the narrative.
+# rows at ANY corpus size. tests/test_similarity_quality.py gates
+# this strategy and the planner's recommendation at recall ≥ 0.9 on
+# that fixture.
 PQ_RERANK_WIDE = 400
 
 

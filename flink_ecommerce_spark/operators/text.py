@@ -886,16 +886,19 @@ def kn_bigram_surprisal(
     plus once for the final token join. All count tables stay
     vocabulary²-bounded-by-observed aggregates with map-side combine;
     the type total folds in as a one-row broadcast. Every count is an
-    exact integer; the float expression is written with the identical
-    operation order in the DuckDB oracle so both engines run the same
-    IEEE sequence. The per-doc mean here is the double AVG of the
-    per-token surprisal — each token of a bigram type carries the
-    identical double, so AVG over (type, count) weights must
-    reproduce the token AVG's VALUE; Spark's AVG(sum/count) over
-    weighted rows is sum(c·s)/sum(c), and the token-level sum's
-    partial order was already partitioning-dependent (the accepted
-    residual class) — the oracle twin computes the identical
-    weighted form.
+    exact integer; the per-bigram probability expression is written
+    with the identical operation order in the DuckDB oracle so both
+    engines compute the same IEEE double per bigram type. The per-doc
+    mean is NOT computed the same way: here it is the count-weighted
+    sum(dc·s)/sum(dc) over (doc, bigram-type) rows, while the oracle
+    twin takes the token-level AVG(s) over exploded bigram tokens.
+    The two agree in exact arithmetic, but dc·s is not bit-identical
+    to dc repeated additions of s, so the doubles can differ in their
+    last bits and a value sitting on a micro-unit rounding boundary
+    can land one micro-bit apart. That is the accepted residual, the
+    same class as any double sum whose partial order depends on
+    partitioning. ``kn_trigram_surprisal`` avoids it by quantizing
+    per type before the integer sum.
 
     Contract note (markov/k-means-centroid class): construction runs
     the one tokenize+count job that materializes the checkpoint."""

@@ -921,8 +921,8 @@ def _copurchase_support_pairs(
     each array's in-task combinations (the same a<b pairs — the
     array is sorted and collect_set deduplicates), and the basket
     table `op` is re-derived by an explode, never re-shuffled.
-    Exchange count of the shared build: 4 → 2 (measured plan diff in
-    plans/r09/copurchase_pairs_*.txt). The checkpointed state shrinks
+    Exchange count of the shared build: 4 → 2 (measured on the
+    ``copurchase_pairs`` physical plan). The checkpointed state shrinks
     from |order,part| rows to |orders| array rows.
 
     The basket table is localCheckpoint'd once — it feeds multiple

@@ -59,7 +59,6 @@ from .plans import analytics, sales, temporal, tpch
 class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # None => driver runs rows-only check
-    bench: bool = False  # include in bench.py headline set
 
 
 def _t(name: str):
@@ -5664,12 +5663,12 @@ from .operators.clustering import (  # noqa: E402
 
 ORACLES["silhouette_by_k"] = _silhouette_by_k_oracle_sql()
 
-_SPEC_DEFS: dict[str, QuerySpec] = {
+SPECS: dict[str, QuerySpec] = {
     # parity (reference surface, SURVEY.md §2)
     "raw_transactions": QuerySpec(_q_raw_transactions, ORACLES["raw_transactions"]),
-    "sales_per_day": QuerySpec(_q_sales_per_day, ORACLES["sales_per_day"], bench=True),
+    "sales_per_day": QuerySpec(_q_sales_per_day, ORACLES["sales_per_day"]),
     "sales_per_category": QuerySpec(
-        _q_sales_per_category, ORACLES["sales_per_category"], bench=True
+        _q_sales_per_category, ORACLES["sales_per_category"]
     ),
     "sales_per_month": QuerySpec(_q_sales_per_month, ORACLES["sales_per_month"]),
     "sales_per_day_purchases": QuerySpec(
@@ -5678,9 +5677,9 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
     "category_stats": QuerySpec(_q_category_stats, ORACLES["category_stats"]),
     "props_extract": QuerySpec(_q_props_extract, ORACLES["props_extract"]),
     # star-schema joins
-    "q1_pricing_summary": QuerySpec(_q_q1, ORACLES["q1_pricing_summary"], bench=True),
-    "q3_shipping_priority": QuerySpec(_q_q3, ORACLES["q3_shipping_priority"], bench=True),
-    "q5_regional_revenue": QuerySpec(_q_q5, ORACLES["q5_regional_revenue"], bench=True),
+    "q1_pricing_summary": QuerySpec(_q_q1, ORACLES["q1_pricing_summary"]),
+    "q3_shipping_priority": QuerySpec(_q_q3, ORACLES["q3_shipping_priority"]),
+    "q5_regional_revenue": QuerySpec(_q_q5, ORACLES["q5_regional_revenue"]),
     "customer_order_totals": QuerySpec(
         _q_customer_order_totals, ORACLES["customer_order_totals"]
     ),
@@ -5698,7 +5697,7 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
     "q4_order_priority": QuerySpec(_q_q4, ORACLES["q4_order_priority"]),
     "q6_revenue_forecast": QuerySpec(_q_q6, ORACLES["q6_revenue_forecast"]),
     "q7_volume_shipping": QuerySpec(_q_q7, ORACLES["q7_volume_shipping"]),
-    "q9_product_profit": QuerySpec(_q_q9, ORACLES["q9_product_profit"], bench=True),
+    "q9_product_profit": QuerySpec(_q_q9, ORACLES["q9_product_profit"]),
     "q10_returned_items": QuerySpec(_q_q10, ORACLES["q10_returned_items"]),
     "q13_order_distribution": QuerySpec(_q_q13, ORACLES["q13_order_distribution"]),
     "q14_promo_revenue": QuerySpec(_q_q14, ORACLES["q14_promo_revenue"]),
@@ -5706,7 +5705,7 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
         _q_q17, ORACLES["q17_small_quantity_revenue"]
     ),
     "q18_large_volume_customers": QuerySpec(
-        _q_q18, ORACLES["q18_large_volume_customers"], bench=True
+        _q_q18, ORACLES["q18_large_volume_customers"]
     ),
     "q19_disjunctive_revenue": QuerySpec(_q_q19, ORACLES["q19_disjunctive_revenue"]),
     "q22_sales_opportunity": QuerySpec(_q_q22, ORACLES["q22_sales_opportunity"]),
@@ -5723,7 +5722,7 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
     "revenue_by_brand": QuerySpec(_q_revenue_by_brand, ORACLES["revenue_by_brand"]),
     # analytics
     "top_users_per_event_type": QuerySpec(
-        _q_top_users, ORACLES["top_users_per_event_type"], bench=True
+        _q_top_users, ORACLES["top_users_per_event_type"]
     ),
     "daily_running_revenue": QuerySpec(
         _q_running_revenue, ORACLES["daily_running_revenue"]
@@ -5766,9 +5765,7 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
     "asof_next_purchase": QuerySpec(
         _q_asof_next_purchase, ORACLES["asof_next_purchase"]
     ),
-    "asof_last_click": QuerySpec(
-        _q_asof_last_click, ORACLES["asof_last_click"], bench=True
-    ),
+    "asof_last_click": QuerySpec(_q_asof_last_click, ORACLES["asof_last_click"]),
     "lineitem_price_bands": QuerySpec(
         _q_price_bands, ORACLES["lineitem_price_bands"]
     ),
@@ -5809,22 +5806,20 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
         _q_dedup_exact_normalized, ORACLES["dedup_exact_normalized"]
     ),
     "minhash_signatures": QuerySpec(
-        _q_minhash_signatures, ORACLES["minhash_signatures"], bench=True
+        _q_minhash_signatures, ORACLES["minhash_signatures"]
     ),
     "lsh_candidate_pairs": QuerySpec(
-        _q_lsh_candidate_pairs, ORACLES["lsh_candidate_pairs"], bench=True
+        _q_lsh_candidate_pairs, ORACLES["lsh_candidate_pairs"]
     ),
     "ngram_jaccard_pairs": QuerySpec(
         _q_ngram_jaccard_pairs, ORACLES["ngram_jaccard_pairs"]
     ),
     "prefix_jaccard_pairs": QuerySpec(
-        _q_prefix_jaccard_pairs, ORACLES["prefix_jaccard_pairs"], bench=True
+        _q_prefix_jaccard_pairs, ORACLES["prefix_jaccard_pairs"]
     ),
-    "bm25_topk": QuerySpec(_q_bm25_topk, ORACLES["bm25_topk"], bench=True),
+    "bm25_topk": QuerySpec(_q_bm25_topk, ORACLES["bm25_topk"]),
     "phrase_search": QuerySpec(_q_phrase_search, ORACLES["phrase_search"]),
-    "hybrid_search_rrf": QuerySpec(
-        _q_hybrid_search_rrf, ORACLES["hybrid_search_rrf"], bench=True
-    ),
+    "hybrid_search_rrf": QuerySpec(_q_hybrid_search_rrf, ORACLES["hybrid_search_rrf"]),
     "supplier_pagerank": QuerySpec(
         _q_supplier_pagerank, ORACLES["supplier_pagerank"]
     ),
@@ -5898,11 +5893,9 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
         _q_event_user_skew_summary, ORACLES["event_user_skew_summary"]
     ),
     "simhash": QuerySpec(_q_simhash, ORACLES["simhash"]),
-    # bench: the iterative component loop is where wall-time surprises
-    # live at scale — measure it every round, not just its LSH input
-    "dedup_clusters": QuerySpec(
-        _q_dedup_clusters, ORACLES["dedup_clusters"], bench=True
-    ),
+    # the iterative component loop is where wall-time surprises live
+    # at scale, not its LSH input
+    "dedup_clusters": QuerySpec(_q_dedup_clusters, ORACLES["dedup_clusters"]),
     "documents_deduped_best": QuerySpec(
         _q_documents_deduped_best, ORACLES["documents_deduped_best"]
     ),
@@ -5926,28 +5919,21 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
     "weighted_sample_by_source": QuerySpec(
         _q_weighted_sample_by_source, ORACLES["weighted_sample_by_source"]
     ),
-    "countmin_sketch": QuerySpec(
-        _q_countmin_sketch, ORACLES["countmin_sketch"], bench=True
-    ),
+    "countmin_sketch": QuerySpec(_q_countmin_sketch, ORACLES["countmin_sketch"]),
     "countmin_estimates": QuerySpec(
         _q_countmin_estimates, ORACLES["countmin_estimates"]
     ),
-    "nb_lang_scores": QuerySpec(
-        _q_nb_lang_scores, ORACLES["nb_lang_scores"], bench=True
-    ),
+    "nb_lang_scores": QuerySpec(_q_nb_lang_scores, ORACLES["nb_lang_scores"]),
     "daily_gapfill": QuerySpec(_q_daily_gapfill, ORACLES["daily_gapfill"]),
     "first_conversion_episode": QuerySpec(
         _q_first_conversion_episode,
         ORACLES["first_conversion_episode"],
-        bench=True,
     ),
     "jl_project": QuerySpec(_q_jl_project, ORACLES["jl_project"]),
     "pq_codes": QuerySpec(_q_pq_codes, ORACLES["pq_codes"]),
     "pq_ann_rerank": QuerySpec(_q_pq_ann_rerank, ORACLES["pq_ann_rerank"]),
     "ivf_pq_topk": QuerySpec(_q_ivf_pq_topk, ORACLES["ivf_pq_topk"]),
-    "pq_ann_topk": QuerySpec(
-        _q_pq_ann_topk, ORACLES["pq_ann_topk"], bench=True
-    ),
+    "pq_ann_topk": QuerySpec(_q_pq_ann_topk, ORACLES["pq_ann_topk"]),
     "entity_merge_groups": QuerySpec(
         _q_entity_merge_groups, ORACLES["entity_merge_groups"]
     ),
@@ -5996,15 +5982,11 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
         _q_profile_documents, ORACLES["profile_documents"]
     ),
     "vocabulary": QuerySpec(_q_vocabulary, ORACLES["vocabulary"]),
-    "unigram_surprisal": QuerySpec(
-        _q_unigram_surprisal, ORACLES["unigram_surprisal"], bench=True
-    ),
+    "unigram_surprisal": QuerySpec(_q_unigram_surprisal, ORACLES["unigram_surprisal"]),
     "bigram_surprisal": QuerySpec(
         _q_bigram_surprisal, ORACLES["bigram_surprisal"]
     ),
-    "sequence_packing": QuerySpec(
-        _q_sequence_packing, ORACLES["sequence_packing"], bench=True
-    ),
+    "sequence_packing": QuerySpec(_q_sequence_packing, ORACLES["sequence_packing"]),
     "packing_efficiency": QuerySpec(
         _q_packing_efficiency, ORACLES["packing_efficiency"]
     ),
@@ -6015,14 +5997,12 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
     "curation_scores": QuerySpec(_q_curation_scores, ORACLES["curation_scores"]),
     "embedding_norms": QuerySpec(_q_embedding_norms, ORACLES["embedding_norms"]),
     # similarity search
-    "knn_bruteforce": QuerySpec(
-        _q_knn_bruteforce, ORACLES["knn_bruteforce"], bench=True
-    ),
+    "knn_bruteforce": QuerySpec(_q_knn_bruteforce, ORACLES["knn_bruteforce"]),
     # same semantics through the Arrow/numpy path — same oracle.
-    # bench=False: Python-worker spin-up dominates at 5k rows; the
-    # GEMM path only wins once batches are ~100k+ vectors.
+    # Python-worker spin-up dominates at 5k rows; the GEMM path only
+    # wins once batches are ~100k+ vectors.
     "knn_bruteforce_pandas": QuerySpec(_q_knn_pandas, ORACLES["knn_bruteforce"]),
-    "knn_int8": QuerySpec(_q_knn_int8, ORACLES["knn_int8"], bench=True),
+    "knn_int8": QuerySpec(_q_knn_int8, ORACLES["knn_int8"]),
     "grouping_sets_sales": QuerySpec(
         _q_grouping_sets, ORACLES["grouping_sets_sales"]
     ),
@@ -6052,12 +6032,8 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
     "embedding_near_dup_pairs": QuerySpec(
         _q_embedding_near_dup, ORACLES["embedding_near_dup_pairs"]
     ),
-    "semantic_dedup": QuerySpec(
-        _q_semantic_dedup, ORACLES["semantic_dedup"], bench=True
-    ),
-    "corpus_funnel": QuerySpec(
-        _q_corpus_funnel, ORACLES["corpus_funnel"], bench=True
-    ),
+    "semantic_dedup": QuerySpec(_q_semantic_dedup, ORACLES["semantic_dedup"]),
+    "corpus_funnel": QuerySpec(_q_corpus_funnel, ORACLES["corpus_funnel"]),
     "corpus_funnel_by_source": QuerySpec(
         _q_corpus_funnel_by_source, ORACLES["corpus_funnel_by_source"]
     ),
@@ -6085,12 +6061,8 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
     "dup_rate_by_source": QuerySpec(
         _q_dup_rate_by_source, ORACLES["dup_rate_by_source"]
     ),
-    "copurchase_pairs": QuerySpec(
-        _q_copurchase_pairs, ORACLES["copurchase_pairs"], bench=True
-    ),
-    "rfm_segments": QuerySpec(
-        _q_rfm_segments, ORACLES["rfm_segments"], bench=True
-    ),
+    "copurchase_pairs": QuerySpec(_q_copurchase_pairs, ORACLES["copurchase_pairs"]),
+    "rfm_segments": QuerySpec(_q_rfm_segments, ORACLES["rfm_segments"]),
     "decayed_user_value": QuerySpec(
         _q_decayed_user_value, ORACLES["decayed_user_value"]
     ),
@@ -6106,9 +6078,7 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
     ),
     "shard_balance": QuerySpec(_q_shard_balance, ORACLES["shard_balance"]),
     "shard_manifest": QuerySpec(_q_shard_manifest, ORACLES["shard_manifest"]),
-    "epoch_shuffle": QuerySpec(
-        _q_epoch_shuffle, ORACLES["epoch_shuffle"], bench=True
-    ),
+    "epoch_shuffle": QuerySpec(_q_epoch_shuffle, ORACLES["epoch_shuffle"]),
     "cluster_silhouette": QuerySpec(
         _q_cluster_silhouette, ORACLES["cluster_silhouette"]
     ),
@@ -6131,10 +6101,10 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
         _q_copurchase_components, ORACLES["copurchase_components"]
     ),
     "linear_attribution": QuerySpec(
-        _q_linear_attribution, ORACLES["linear_attribution"], bench=True
+        _q_linear_attribution, ORACLES["linear_attribution"]
     ),
     "copurchase_graph_stats": QuerySpec(
-        _q_copurchase_graph_stats, ORACLES["copurchase_graph_stats"], bench=True
+        _q_copurchase_graph_stats, ORACLES["copurchase_graph_stats"]
     ),
     "quality_psi_by_source": QuerySpec(
         _q_quality_psi_by_source, ORACLES["quality_psi_by_source"]
@@ -6142,15 +6112,11 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
     "t_closeness_report": QuerySpec(
         _q_t_closeness_report, ORACLES["t_closeness_report"]
     ),
-    "epoch_mixture": QuerySpec(
-        _q_epoch_mixture, ORACLES["epoch_mixture"], bench=True
-    ),
+    "epoch_mixture": QuerySpec(_q_epoch_mixture, ORACLES["epoch_mixture"]),
     "l_diversity_report": QuerySpec(
         _q_l_diversity_report, ORACLES["l_diversity_report"]
     ),
-    "daily_changepoint": QuerySpec(
-        _q_daily_changepoint, ORACLES["daily_changepoint"], bench=True
-    ),
+    "daily_changepoint": QuerySpec(_q_daily_changepoint, ORACLES["daily_changepoint"]),
     "daily_distinct_users_hll": QuerySpec(
         _q_daily_distinct_users_hll, ORACLES["daily_distinct_users_hll"]
     ),
@@ -6178,11 +6144,9 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
     ),
     "hll_registers": QuerySpec(_q_hll_registers, ORACLES["hll_registers"]),
     "hll_distinct_users": QuerySpec(
-        _q_hll_distinct_users, ORACLES["hll_distinct_users"], bench=True
+        _q_hll_distinct_users, ORACLES["hll_distinct_users"]
     ),
-    "value_psi_by_type": QuerySpec(
-        _q_value_psi_by_type, ORACLES["value_psi_by_type"], bench=True
-    ),
+    "value_psi_by_type": QuerySpec(_q_value_psi_by_type, ORACLES["value_psi_by_type"]),
     "pmi_collocations": QuerySpec(
         _q_pmi_collocations, ORACLES["pmi_collocations"]
     ),
@@ -6192,7 +6156,7 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
     ),
     "kn_bigram_surprisal": QuerySpec(
         _q_kn_bigram_surprisal, ORACLES["kn_bigram_surprisal"]
-    , bench=True),
+    ),
     "salted_segment_revenue": QuerySpec(
         _q_salted_segment_revenue, ORACLES["salted_segment_revenue"]
     ),
@@ -6228,13 +6192,13 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
     ),
     "kmv_value_quantiles": QuerySpec(
         _q_kmv_value_quantiles, ORACLES["kmv_value_quantiles"]
-    , bench=True),
+    ),
     "conversion_survival": QuerySpec(
         _q_conversion_survival, ORACLES["conversion_survival"]
-    , bench=True),
+    ),
     "quality_matched_sample": QuerySpec(
         _q_quality_matched_sample, ORACLES["quality_matched_sample"]
-    , bench=True),
+    ),
     "events_profile": QuerySpec(
         _q_events_profile, ORACLES["events_profile"]
     ),
@@ -6243,21 +6207,13 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
     ),
     "source_overlap_minhash": QuerySpec(
         _q_source_overlap_minhash, ORACLES["source_overlap_minhash"]
-    , bench=True),
-    "bloom_admission": QuerySpec(
-        _q_bloom_admission, ORACLES["bloom_admission"], bench=True
     ),
+    "bloom_admission": QuerySpec(_q_bloom_admission, ORACLES["bloom_admission"]),
     # r06 additions — registry tail: mini-driver green now, first
     # into the r07 window (COVERAGE.md verification rotation)
-    "boilerplate_lines": QuerySpec(
-        _q_boilerplate_lines, ORACLES["boilerplate_lines"], bench=True
-    ),
-    "line_dedup": QuerySpec(
-        _q_line_dedup, ORACLES["line_dedup"], bench=True
-    ),
-    "token_waterfill": QuerySpec(
-        _q_token_waterfill, ORACLES["token_waterfill"], bench=True
-    ),
+    "boilerplate_lines": QuerySpec(_q_boilerplate_lines, ORACLES["boilerplate_lines"]),
+    "line_dedup": QuerySpec(_q_line_dedup, ORACLES["line_dedup"]),
+    "token_waterfill": QuerySpec(_q_token_waterfill, ORACLES["token_waterfill"]),
     "boilerplate_shingles": QuerySpec(
         _q_boilerplate_shingles, ORACLES["boilerplate_shingles"]
     ),
@@ -6265,7 +6221,7 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
         _q_strip_boilerplate, ORACLES["strip_boilerplate"]
     ),
     "quality_ks_by_source": QuerySpec(
-        _q_quality_ks_by_source, ORACLES["quality_ks_by_source"], bench=True
+        _q_quality_ks_by_source, ORACLES["quality_ks_by_source"]
     ),
     "value_benford_by_type": QuerySpec(
         _q_value_benford_by_type, ORACLES["value_benford_by_type"]
@@ -6273,223 +6229,6 @@ _SPEC_DEFS: dict[str, QuerySpec] = {
     "value_ks_by_type": QuerySpec(
         _q_value_ks_by_type, ORACLES["value_ks_by_type"]
     ),
-}
-
-# The external correctness driver verifies the registry IN ITERATION
-# ORDER and records at most ~50 entries per round. Rotation invariant
-# (COVERAGE.md "Verification rotation"): every registry query must
-# hold a green row from SOME round whose implementation is unchanged
-# since — so the window each round front-loads (1) queries never yet
-# externally verified, (2) every query whose plan changed this round,
-# then (3) backfills with stable already-green queries. Queries
-# rotated to the tail keep their prior-round certification precisely
-# because their code is untouched; touching one moves it back into
-# the window.
-_VERIFY_FIRST: tuple[str, ...] = (
-    # ================= r10 window =================
-    # Composition (VERDICT r09 #10 + r09 ADVICE #1 + COVERAGE.md):
-    # (A) the round's 4 fingerprint-drifted re-plans:
-    #     semantic_dedup (within-cell prefix-bound prefilter +
-    #     unrolled exact dot), kn_trigram_surprisal /
-    #     kn_bigram_surprisal (one-token-scan checkpoint),
-    #     hybrid_search_rrf (lexical shingle scan checkpointed once,
-    #     query slice pruned before shingling).
-    "semantic_dedup",
-    "kn_trigram_surprisal",
-    "kn_bigram_surprisal",
-    "hybrid_search_rrf",
-    # (B) checkpoint-shielded consumers whose EXECUTED internals
-    #     changed this round while their analyzed-plan fingerprints
-    #     cannot see it (the r09 ADVICE blind spot, now routinely
-    #     rotated): the CC/pagerank loops record real partitioning
-    #     across localCheckpoints (AQE off at capture) and run lazy
-    #     edge/label checkpoints; cands checkpoints went lazy in the
-    #     LSH/prefix/fuzzy families (incremental_fuzzy_dedup also
-    #     dropped its single-use nb checkpoint); decontaminate and
-    #     the funnel family carry the size-gated eval broadcast and
-    #     the funnel's one-split-per-row shingle build.
-    "supplier_pagerank",
-    "dedup_clusters",
-    "copurchase_components",
-    "entity_merge_groups",
-    "lsh_candidate_pairs",
-    "lsh_candidate_precision",
-    "lsh_recall_report",
-    "lsh_recall_sampled",
-    "prefix_jaccard_pairs",
-    "incremental_fuzzy_dedup",
-    "fuzzy_decontaminate",
-    "decontaminate",
-    "contamination_report",
-    "curated_corpus",
-    "corpus_funnel",
-    "corpus_funnel_by_source",
-    "curation_drop_reasons",
-    # (C) staleness backfill, oldest certifications first: the r03
-    #     holdout (props_extract), the 8 backfills displaced by the
-    #     r09 re-plans (phrase_search, media_dedup,
-    #     asof_next_purchase, balanced_shards, bpe_merge_candidates,
-    #     countmin_estimates, countmin_sketch — entity_merge_groups
-    #     is in (B)), and the REST of the r04 cohort including the
-    #     whole cosine/ANN ROUND family COVERAGE.md had queued for
-    #     r10+. This clears every r04-certified row except
-    #     weighted_sample_by_source (first in the r11 queue).
-    "props_extract",
-    "phrase_search",
-    "media_dedup",
-    "asof_next_purchase",
-    "balanced_shards",
-    "bpe_merge_candidates",
-    "countmin_estimates",
-    "countmin_sketch",
-    "pit_enriched_events",
-    "pq_codes",
-    "repeated_substring_spans",
-    "ann_lsh_topk",
-    "ann_lsh_topk_planned",
-    "bm25_topk",
-    "budgeted_mixture",
-    "embedding_near_dup_pairs",
-    "embedding_quantize_int8",
-    "first_conversion_episode",
-    "hard_negatives",
-    "ivf_ann_topk",
-    "ivf_pq_topk",
-    "jl_project",
-    "knn_bruteforce",
-    "knn_bruteforce_pandas",
-    "knn_int8",
-    "pq_ann_topk",
-    "quality_thresholds",
-    "shard_balance",
-    "weighted_sample",
-)
-
-_VERIFY_FIRST_R09: tuple[str, ...] = (
-    # r09 window (VERDICT r08 #1-#3 + COVERAGE.md rotation/migration
-    # queues). Composition:
-    # (1) kn_trigram_surprisal — the only registry query that never
-    #     held an external green row (registered after the r08
-    #     window filled), plus its migration to the per-row-micro
-    #     integer mean;
-    # (2) the two winnowing queries — re-planned this round to the
-    #     zero-shuffle array form (VERDICT r08 #1);
-    # (3) silhouette_by_k — newly registered with its UNION-ALL
-    #     per-K oracle (VERDICT r08 #3), plus cluster_silhouette's
-    #     exact-mean helper refactor;
-    # (4) the three r08-certified queries migrated off
-    #     micro(AVG(double)) to order-independent integer means
-    #     (r08 ADVICE #2): category_stats, event_metrics_long,
-    #     customers_above_avg_balance;
-    # (5) the 17 stale r03 non-carrier rows (certifications valid
-    #     but five rounds old — the staleness rotation);
-    # (6) the r04 ROUND-carrier migration block: 15 carriers
-    #     re-encoded to the integer contract on their rotation
-    #     (per-row cents sums, pure-integer DIV shares, micro
-    #     finals, integer-grid thresholds — incl. the gopher
-    #     metric family and the last legacy ROUND-jaccard holdouts
-    #     prefix_jaccard_pairs / incremental_fuzzy_dedup);
-    # (7) two r08-certified composers transitively re-planned by
-    #     prefix_jaccard_pairs' migration (their truth side):
-    #     lsh_recall_report, lsh_recall_sampled;
-    # (8) eight ROUND-free r04-certified rows as staleness backfill
-    #     (pit_enriched_events / pq_codes / repeated_substring_spans
-    #     head the r10 backfill queue).
-    # Still queued (COVERAGE.md): the r04 cosine/ANN ROUND family
-    # (shared fragment, large transitive set) and the remaining
-    # r04/r05/r06 carriers — r10+.
-    "kn_trigram_surprisal",
-    "winnowing_fingerprints",
-    "winnowing_overlap_pairs",
-    "silhouette_by_k",
-    "cluster_silhouette",
-    "category_stats",
-    "event_metrics_long",
-    "customers_above_avg_balance",
-    # (5) the r03 staleness block
-    "raw_transactions",
-    "corpus_diff",
-    "dedup_exact",
-    "dedup_exact_normalized",
-    "distinct_user_event_pairs",
-    "doc_chunks",
-    "incremental_dedup",
-    "latest_event_per_user",
-    "minhash_signatures",
-    "multimodal_thumbnails",
-    "purchasers_also_errored",
-    "scd2_user_segments",
-    "sequence_packing",
-    "simhash",
-    "simhash_near_pairs",
-    "viewers_never_purchased",
-    # (6) the r04 carrier migration block
-    "daily_gapfill",
-    "daily_anomaly_scores",
-    "event_user_skew_topk",
-    "event_user_skew_summary",
-    "corpus_growth",
-    "cross_corpus_surprisal",
-    "supplier_pagerank",
-    "value_percentiles_hist",
-    "gopher_quality_flags",
-    "corpus_funnel",
-    "corpus_funnel_by_source",
-    "curation_drop_reasons",
-    "prefix_jaccard_pairs",
-    "incremental_fuzzy_dedup",
-    "nb_lang_scores",
-    # (7) transitively re-planned composers
-    "lsh_recall_report",
-    "lsh_recall_sampled",
-    # (9) r09 OPTIMIZATION re-plans (each displaces one staleness
-    #     backfill below — those keep their valid prior-round
-    #     certifications, plans unchanged):
-    #     markov_attribution — the unrolled all-Spark propagation
-    #     (3 walks × Σsteps ≈ 108 broadcast-join mini-plans over a
-    #     ≤25-row matrix) replaced by a driver-side integer walk on
-    #     the collected bounded matrix (k-means centroid pattern);
-    #     measured 35.5 s → see OPTIMIZATION_r09.md.
-    #     classifier_calibration — top-2-per-doc re-planned from a
-    #     row_number window (full sort-exchange of the |docs|×|classes|
-    #     grid) + a corpus-sized join back to documents for the true
-    #     label, to one sorted-collect_list aggregate with the
-    #     doc-constant label carried as MAX through the existing
-    #     aggregates (Window nodes 6 → 0).
-    #     the copurchase family — the shared basket build collapsed
-    #     distinct + orderkey self-join (4 exchanges) into one
-    #     groupBy(l_orderkey)/sorted-collect_set basket table whose
-    #     pairs explode in-task (2 exchanges); all five consumers
-    #     re-plan transitively.
-    "markov_attribution",
-    "classifier_calibration",
-    "copurchase_pairs",
-    "copurchase_graph_stats",
-    "copurchase_components",
-    "item_neighbors_topk",
-    "basket_rules",
-    #     _doc_shingles' explode→distinct collapsed to a per-row
-    #     array_distinct (doc_id is in the pair key, so the global
-    #     distinct only removed within-doc repeats): one full-stream
-    #     Exchange fewer in every shingle consumer; these two are the
-    #     non-checkpoint-shielded consumers whose plans drift.
-    "shingle_novelty",
-    "hybrid_search_rrf",
-    # (8) ROUND-free r04 staleness backfill (phrase_search,
-    # media_dedup, asof_next_purchase, balanced_shards,
-    # bpe_merge_candidates, countmin_estimates, countmin_sketch,
-    # entity_merge_groups were displaced by the r09 re-plans above —
-    # their r04 certifications stay valid, plans unchanged; one r03
-    # staleness rotation (props_extract) also yields its slot, its
-    # r03 row likewise still plan-pinned)
-)
-assert set(_VERIFY_FIRST) <= set(_SPEC_DEFS), sorted(
-    set(_VERIFY_FIRST) - set(_SPEC_DEFS)
-)
-
-SPECS: dict[str, QuerySpec] = {
-    **{name: _SPEC_DEFS[name] for name in _VERIFY_FIRST},
-    **{k: v for k, v in _SPEC_DEFS.items() if k not in set(_VERIFY_FIRST)},
 }
 
 
@@ -6502,6 +6241,3 @@ def oracle_sql() -> dict[str, str]:
         name: spec.oracle for name, spec in SPECS.items() if spec.oracle is not None
     }
 
-
-def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: spec.fn for name, spec in SPECS.items() if spec.bench}

@@ -181,11 +181,9 @@ class StagedMergeSink:
 
     def write_batch(self, batch_df: DataFrame, epoch_id: int | None = None) -> None:
         reduced = self._reduce_to_latest(batch_df)
-        # foreachBatch routinely delivers empty micro-batches; staging
-        # zero part files would make read_parquet('<stage>/*.parquet')
-        # fail on an empty glob
-        if reduced.isEmpty():
-            return
+        # one pass over the batch plan: an empty micro-batch (routine
+        # under foreachBatch) still stages one schema-only part file,
+        # so the glob below matches and the MERGE reads zero rows
         stage = f"{self.stage_dir}/epoch={epoch_id or 0}"
         reduced.write.mode("overwrite").parquet(stage)
         sql = merge_upsert_sql(

@@ -14,6 +14,7 @@ from flink_ecommerce_spark.session import get_spark  # noqa: E402
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
+SF_LARGE = "/root/testdata/sf0.1"
 
 
 @pytest.fixture(scope="session")
@@ -25,12 +26,11 @@ def spark():
 
 @pytest.fixture(scope="session")
 def registry_frames(spark):
-    """Every registry query constructed ONCE at sf0.001, shared by the
-    whole-registry sweeps (plan antipatterns, ledger fingerprints).
-    Construction is the expensive part — several queries run eager
-    localCheckpoint / bounded-collect jobs at construction time — and
-    the three sweeps used to pay it once EACH (~230 s per pass).
-    Returns ({name: DataFrame}, {name: error_string})."""
+    """Every registry query constructed ONCE at sf0.001 for the
+    whole-registry plan sweep. Construction is the expensive part —
+    several queries run eager localCheckpoint / bounded-collect jobs
+    at construction time. Returns ({name: DataFrame}, {name:
+    error_string})."""
     from flink_ecommerce_spark import registry
 
     frames: dict = {}

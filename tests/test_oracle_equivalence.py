@@ -1,8 +1,7 @@
 """Mini-driver: run every registered query on Spark AND its DuckDB
 oracle on the same parquet, compare row count + column names +
-order-insensitive values. This replicates the driver's correctness
-gate (CORRECTNESS_r{N}.json) locally so mismatches surface before a
-round ends.
+order-insensitive values — the repo's correctness gate over all
+oracle-backed registry queries.
 """
 
 from __future__ import annotations

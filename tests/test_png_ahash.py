@@ -170,16 +170,3 @@ def test_ahash_png_end_to_end_and_perceptual(spark):
     assert ham_near <= 7  # inside media_ahash_pairs' threshold
     assert ham_far > 7  # structural change escapes it
     assert ham_near < ham_far
-
-
-def test_stub_media_ahash_plan_unchanged(spark):
-    """The certified stub path must be untouched by the PNG addition
-    (its r08 oracle row stays valid through the rotation invariant)."""
-    from tests.plan_fp import LEDGER_SF, load_ledger, plan_fingerprint
-    from flink_ecommerce_spark import registry
-
-    ledger = load_ledger()
-    fp = plan_fingerprint(
-        registry.SPECS["media_ahash"].fn(spark, LEDGER_SF)
-    )
-    assert fp == ledger["media_ahash"]

@@ -4,6 +4,7 @@ shuffle elimination.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_ecommerce_spark import catalog
@@ -265,3 +266,67 @@ def test_bloom_prefilter_is_scan_shaped(spark):
     )
     assert "Exchange" not in plan
     assert "Join" not in plan
+
+
+@pytest.mark.parametrize("found", [None, "false"])
+def test_checkpoint_helpers_restore_aqe_as_found(spark, found):
+    """Both checkpoint helpers turn AQE off only for the call: an
+    explicit value comes back as it was, an unset key stays unset."""
+    from flink_ecommerce_spark.operators.scale import (
+        checkpoint_keep_partitioning,
+        checkpoint_partitioned,
+    )
+
+    key = "spark.sql.adaptive.enabled"
+    saved = spark.conf.getAll.get(key)
+    try:
+        if found is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, found)
+        df = spark.range(16)
+        assert checkpoint_partitioned(df, "id").count() == 16
+        assert spark.conf.getAll.get(key) == found
+        assert checkpoint_keep_partitioning(df, eager=True).count() == 16
+        assert spark.conf.getAll.get(key) == found
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+
+
+def test_checkpoint_helpers_restore_aqe_under_concurrent_calls(spark):
+    """Threads checkpointing on one session at once: the key must end
+    as it was found. Unserialized, one thread can read another's
+    temporary "false" as the value to restore and leave AQE off."""
+    import sys
+    import threading
+
+    from flink_ecommerce_spark.operators.scale import checkpoint_keep_partitioning
+
+    key = "spark.sql.adaptive.enabled"
+    found = spark.conf.getAll.get(key)
+    df = spark.range(16)
+    errors = []
+
+    def work():
+        try:
+            for _ in range(5):
+                checkpoint_keep_partitioning(df)
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not errors, errors
+    assert spark.conf.getAll.get(key) == found

@@ -254,6 +254,33 @@ def test_pq_rerank_beats_raw_adc_recall(spark):
     assert mean_recall(rer) >= 0.5, f"rerank recall {mean_recall(rer):.2f}"
 
 
+def test_ann_recall_gate_at_sf01(spark):
+    """Recall@k floor of 0.9 against brute force on the 2,000-vector
+    sf0.1 corpus, for both the above-crossover strategy
+    (``pq_ann_rerank``, what a large corpus gets) and whatever
+    ``ann_plan_for`` recommends at this corpus size. PQ_RERANK_WIDE
+    is sized for this bar; the sf0.001 check above only asks 0.5."""
+    from tests.conftest import SF_LARGE
+
+    emb = catalog.table(spark, SF_LARGE, "embeddings")
+    truth = _topk_sets(similarity.knn_bruteforce(emb))
+    assert truth
+
+    def recall(approx):
+        return sum(
+            len(truth[q] & approx.get(q, set())) / len(truth[q]) for q in truth
+        ) / len(truth)
+
+    strategies = {
+        "bruteforce": similarity.knn_bruteforce,
+        "pq_rerank": similarity.pq_ann_rerank,
+    }
+    rec = similarity.ann_plan_for(emb.count())["strategy"]
+    for name in sorted({"pq_rerank", rec}):
+        got = recall(_topk_sets(strategies[name](emb)))
+        assert got >= 0.9, f"{name} recall@{similarity.DEFAULT_K} {got:.3f}"
+
+
 def test_ivf_pq_recall_and_routing(spark):
     """IVF-PQ: results come only from routed cells (subset of
     ivf_topk's candidate discipline) and recall is pinned to a sane

@@ -307,8 +307,8 @@ def test_staged_merge_epoch_retry_is_idempotent(spark, tmp_path):
 
 def test_staged_merge_skips_empty_batch(spark, tmp_path):
     """foreachBatch routinely delivers empty micro-batches; the sink
-    must not stage zero part files (read_parquet on an empty glob
-    raises) nor touch the target table."""
+    must stage a file the MERGE's read_parquet glob matches (an empty
+    glob raises) and leave the target table untouched."""
     import duckdb
 
     db = str(tmp_path / "empty.duckdb")
